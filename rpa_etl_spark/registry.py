@@ -97,7 +97,7 @@ PRIORITY_ORDER = [
     "q_multimodal_mpeg_pframes",
     "q_multimodal_mpeg_bframes",
     "q_multimodal_decode",
-    # == tier B' (4): consumers of the gateway-scoped col_memo rework
+    # == tier B' (5): consumers of the gateway-scoped col_memo rework
     #    (functions/exprs.py + pipeline.py — ADVICE items) and of the
     #    salted_join hot-side broadcast hint (operators/skew.py — r14
     #    verdict #6); kernel-consumer rule pulls them in.
@@ -106,8 +106,16 @@ PRIORITY_ORDER = [
     "q_join_skew_salted",
     "q_agg_skew_salted",
     "q_scan_project",
-    # == tier C (13): r11-stale fill, in their prior relative order —
-    #    13 of the 36 r11-verdict queries fit after tiers A and B; the
+    # == tier B'' (4): KERNEL_CONSUMERS of sources/pdf.py, whose
+    #    binaryFile scan is now coalesced by real bytes. None of the four
+    #    reads files through read_pdf_files, so their plans are unchanged;
+    #    the kernel-consumer rule pulls them in.
+    "q_pdf_extract",
+    "q_pdf_extract_hard",
+    "q_pdf_extract_encrypted",
+    "q_pdf_extract_passworded",
+    # == tier C (9): r11-stale fill, in their prior relative order —
+    #    9 of the 36 r11-verdict queries fit after tiers A and B; the
     #    rest sit directly below the window, oldest-first, so any future
     #    rotation picks them up next.
     "q_having_large_orders",
@@ -119,13 +127,14 @@ PRIORITY_ORDER = [
     "q_histogram",
     "q_sample_stratified",
     "q_funnel",
+    # ---------------- below the sampled window ----------------
+    # == r11-stale remainder (27 of 36; kernels/plans unchanged since
+    #    their green verdict, covered by the local 180/180 oracle sweep);
+    #    the four tier-C entries tier B'' pushed out of the window lead:
     "q_retention_cohort",
     "q_outlier_zscore",
     "q_unpivot",
     "q_embedding_centroid",
-    # ---------------- below the sampled window ----------------
-    # == r11-stale remainder (23 of 36; kernels/plans unchanged since
-    #    their green verdict, covered by the local 180/180 oracle sweep):
     "q_repetition_stats",
     "q_join_asof",
     "q_heavy_hitters_cms",
@@ -241,10 +250,6 @@ PRIORITY_ORDER = [
     "q_domain_mix_bpe",
     "q_pagerank",
     "q_pagerank_dangling",
-    "q_pdf_extract",
-    "q_pdf_extract_hard",
-    "q_pdf_extract_passworded",
-    "q_pdf_extract_encrypted",
     "q_recursive_cte",
     "q_dedup_bloom",
     "q_profile_stats",

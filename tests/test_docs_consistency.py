@@ -37,7 +37,7 @@ def test_registry_tier_comments_match_list_structure():
     # count entries above the below-window marker
     names_above = re.findall(r'^    "(q_\w+)",', src[:below], re.M)
     assert len(names_above) == 50, f"window holds {len(names_above)}"
-    for m in re.finditer(r"tier ([A-C]) \((\d+)\)", src):
+    for m in re.finditer(r"tier ([A-C]'*) \((\d+)\)", src):
         tier, n = m.group(1), int(m.group(2))
         # slice the list between this tier comment and the next tier
         # marker (or the below-window marker)

@@ -5,7 +5,13 @@ over transparently (same schema)."""
 
 from __future__ import annotations
 
+import contextlib
+import math
+import os
+import re
 import zlib
+
+import pytest
 
 from rpa_etl_spark.sources import minipdf
 from rpa_etl_spark.sources import pdf as P
@@ -152,6 +158,86 @@ def test_pdf_size_gate(spark, tmp_path):
     assert P.validate_pdf_ingress(df, max_bytes=10_000).count() == 1
 
 
+# ---------------------------------------------------------------------------
+# scan packing: read_pdf_files sizes the binaryFile scan by real bytes
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def small_corpus(tmp_path_factory):
+    """~40 KB-sized invoices, one non-PDF and one oversized file."""
+    d = tmp_path_factory.mktemp("small_corpus")
+    for i in range(40):
+        (d / f"{i}.pdf").write_bytes(
+            make_pdf([["NOTA FISCAL", f"DOC {i}", f"TOTAL: R$ {i},00"]],
+                     compress=i % 2 == 0)
+        )
+    (d / "fake.pdf").write_bytes(b"NOPE " * 10)
+    (d / "big.pdf").write_bytes(make_pdf([["big"]]) + b"%" * 4000)
+    return str(d)
+
+
+def _raw_scan(spark, path):
+    """The scan as Spark plans it on its own (no packing)."""
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.pdf")
+        .option("recursiveFileLookup", "true")
+        .load(path)
+    )
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_small_corpus_packs_to_one_task_per_core(spark, small_corpus):
+    cores = spark.sparkContext.defaultParallelism
+    # a 64 MB open cost makes Spark's own split rule plan ~2 files per
+    # task even for 42 files, so the packing has something to undo
+    with _conf(spark, "spark.sql.files.openCostInBytes", str(64 << 20)):
+        assert _raw_scan(spark, small_corpus).rdd.getNumPartitions() > cores
+        assert P.read_pdf_files(spark, small_corpus).rdd.getNumPartitions() <= cores
+
+
+def test_packing_keeps_the_per_task_byte_cap(spark, small_corpus):
+    scan_bytes = sum(
+        os.path.getsize(os.path.join(small_corpus, f))
+        for f in os.listdir(small_corpus)
+    )
+    cap = 2048
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", str(cap)):
+        n = P.read_pdf_files(spark, small_corpus).rdd.getNumPartitions()
+    assert n >= math.ceil(scan_bytes / cap) > spark.sparkContext.defaultParallelism
+
+
+def test_size_gate_pushes_into_the_scan_below_the_coalesce(spark, small_corpus):
+    """The ``length <= max_bytes`` gate prunes in the file scan, so an
+    oversized file's content is never decoded; packing must not lift the
+    filter above the coalesce."""
+    df = P.validate_pdf_ingress(P.read_pdf_files(spark, small_corpus), max_bytes=3000)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = re.search(r"PushedFilters: \[[^\]]*LessThanOrEqual\(length,3000\)", plan)
+    assert pushed, plan
+    assert plan.index("Coalesce") < pushed.start(), plan
+    assert df.count() == 40  # the fake fails the magic gate, big the size gate
+
+
+def test_packed_pipeline_returns_the_unpacked_rows(spark, small_corpus):
+    packed = P.pdf_pipeline(spark, small_corpus).collect()
+    unpacked = P.extract_pdf_text(
+        P.validate_pdf_ingress(_raw_scan(spark, small_corpus))
+    ).collect()
+    assert len(packed) == 41
+    assert sorted(map(tuple, packed)) == sorted(map(tuple, unpacked))
+
+
 def test_pdf_corpus_invariants_for_declared_query(sf_dir):
     """q_pdf_extract's writer encodes page text as latin-1 and its oracle
     mirrors an ASCII whitespace-collapse; both assumptions must hold for
@@ -216,8 +302,6 @@ def test_q_pdf_extract_handles_messy_prefixes(spark):
 # property-based: arbitrary printable-latin-1 pages round-trip the writer →
 # extractor pair (beyond the fixed fixtures above)
 # ---------------------------------------------------------------------------
-
-import pytest
 
 hypothesis = pytest.importorskip("hypothesis")
 if True:
